@@ -1,6 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Report a failure on stderr; stdout carries only the contract line. */
+  private def warn(what: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $what — ${e.getClass.getName}: ${e.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -43,7 +47,7 @@ object Bench {
         .start()
       sq.awaitTermination(30000)
       sq.stop()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => warn("warm-up failed", e) }
     // Optional comma-separated allowlist for local iteration (the driver
     // sets no filter and runs everything).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -65,7 +69,7 @@ object Bench {
         try { fn(spark, sfDir).count(); true }
         catch {
           case e: Throwable =>
-            System.err.println(s"[bench] QUERY FAILED: $name — ${e.getClass.getName}: ${e.getMessage}")
+            warn(s"QUERY FAILED: $name", e)
             false
         }
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
@@ -125,13 +129,17 @@ object Bench {
         }
       }.map(_.reverse).reverse
         .filter(g => g.size >= 3 || g.map(_._3).sum >= 5.0)
-    } catch { case _: Throwable => Nil }
+    } catch {
+      case e: Throwable =>
+        warn("storm adjudication skipped (BASELINE.json unreadable)", e)
+        Nil
+    }
     val resultMap = results.toMap
     val remeasured: Map[String, Double] =
       stormGroups.flatten.map(_._2).distinct.map { name =>
         val t0 = System.nanoTime()
         val ok = try { graft.queries.Catalog.queriesMap(name)(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable => warn(s"REMEASURE FAILED: $name", e); false }
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }.toMap
     val stormJson = stormGroups.map { g =>
@@ -184,11 +192,11 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_last.json"),
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => warn("could not write bench_last.json", e) }
     try {
       spark.sparkContext.setLogLevel("OFF")
       spark.stop()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => warn("spark.stop() failed", e) }
     finally {
       println(line)
       Console.out.flush()

@@ -46,6 +46,7 @@ object GraftExtensions {
       MinHashSignature(exprs.head,
         exprs(1).eval().asInstanceOf[Number].intValue())),
     "simhash64" -> ((exprs: Seq[Expression]) => SimHash64(exprs.head)),
+    "char_gram_hashes" -> ((exprs: Seq[Expression]) => CharGramHashes(exprs.head)),
     "srp_bands" -> ((exprs: Seq[Expression]) =>
       SrpBands(exprs.head,
         exprs(1).eval().asInstanceOf[Number].intValue(),

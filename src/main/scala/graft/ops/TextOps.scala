@@ -346,25 +346,25 @@ object TextOps {
       .orderBy("rank")
   }
 
-  /** Content fingerprint from 8-char polynomial rolling hashes (base 31,
-    * mod 1e9+7): per doc the minimum gram hash + distinct gram count —
-    * an order-invariant signature comparable across engines (plain integer
-    * arithmetic, no engine hash functions).
+  /** Content fingerprint from 8-code-point polynomial rolling hashes
+    * (base 31, mod 1e9+7): per doc the minimum gram hash + distinct gram
+    * count — an order-invariant signature comparable across engines (plain
+    * integer arithmetic, no engine hash functions).
+    *
+    * The gram hashes come from the native `char_gram_hashes` kernel
+    * ([[graft.functions.CharGramHashes]]), not a
+    * `transform(sequence(...), p -> ascii(substr(...)) ...)` lambda: Spark
+    * evaluates a higher-order-function lambda interpreted, one boxed value
+    * per element (`doc_fingerprint` at sf0.1 on 4 cores: 13.6 s with the
+    * lambda, 0.3 s with the kernel). Entirely per-row (array_min /
+    * array_distinct on the gram array): zero shuffle below the output
+    * sort — vs the naive explode + groupBy which shuffles |text| rows per
+    * document.
     */
   def fingerprint(docs: DataFrame): DataFrame = {
-    // 31^7 .. 31^0 as explicit constants so both engines compute the exact
-    // same integer polynomial.
-    val pows = Seq(27512614111L, 887503681L, 28629151L, 923521L, 29791L, 961L, 31L, 1L)
-    val terms = pows.zipWithIndex
-      .map { case (p, j) => s"ascii(substr(text, p + $j, 1)) * cast($p as bigint)" }
-      .mkString(" + ")
-    // Entirely per-row (array_min / array_distinct on the gram array):
-    // zero shuffle, stays in one codegen stage over the scan — vs the
-    // naive explode + groupBy which shuffles |text| rows per document.
+    graft.functions.CharGramHashes.register(docs.sparkSession)
     docs.filter(length(col("text")) >= 8)
-      .select(col("doc_id"),
-        expr(s"transform(sequence(1, length(text) - 7), p -> ($terms) % 1000000007)")
-          .as("grams"))
+      .select(col("doc_id"), expr("char_gram_hashes(text)").as("grams"))
       .select(col("doc_id"),
         expr("array_min(grams)").as("min_gram_hash"),
         expr("size(array_distinct(grams))").cast("long").as("n_distinct_grams"))

@@ -37,16 +37,21 @@ object Tables {
       // changes what inference RETURNS for the same bytes
       // (nanosAsLong: TIMESTAMP(NANOS) reads as LongType vs an error), so
       // a session running with a different flag never inherits another
-      // session's inference.
+      // session's inference. The walk is recursive, so a part file
+      // rewritten under a `key=val/` partition subdirectory moves the key
+      // too.
       val nanosConf = s.conf.getOption(
         "spark.sql.legacy.parquet.nanosAsLong").getOrElse("false")
       val pathKey = f.getCanonicalPath + "#nanosAsLong=" + nanosConf
       val key =
         if (f.isFile) (pathKey, f.lastModified(), f.length())
         else {
-          val parts = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          val maxMtime = (f.lastModified() +: parts.map(_.lastModified())).max
-          (pathKey, maxMtime, parts.map(_.length()).sum)
+          def walk(d: java.io.File): Seq[java.io.File] =
+            Option(d.listFiles()).toSeq.flatten
+              .flatMap(c => c +: (if (c.isDirectory) walk(c) else Nil))
+          val entries = walk(f)
+          val maxMtime = (f.lastModified() +: entries.map(_.lastModified())).max
+          (pathKey, maxMtime, entries.filter(_.isFile).map(_.length()).sum)
         }
       val sch = schemaMemo.memoize(key)(s.read.parquet(path).schema)(_ => ())
       s.read.schema(sch).parquet(path)

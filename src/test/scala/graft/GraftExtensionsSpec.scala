@@ -46,6 +46,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .head.getSeq[Long](0)
       assert(sig.length == 8)
       assert(s.sql("SELECT simhash64(array('a','b')) AS h").head.get(0) != null)
+      assert(s.sql("SELECT char_gram_hashes('abcdefghij') AS g").head.getSeq[Long](0) ==
+        Seq(628658458L, 58359503L, 488060555L))
       val bands = s.sql(
         """SELECT srp_bands(CAST(array(0.5, -0.25) AS ARRAY<FLOAT>), 4, 8) AS b""")
         .head.getSeq[Long](0)

@@ -152,6 +152,58 @@ class FunctionsSpec extends AnyFunSuite {
     both.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
+  test("native char_gram_hashes is bit-identical to the substr/ascii lambda") {
+    val s = spark
+    import s.implicits._
+    CharGramHashes.register(spark)
+    // Reference: the substr/ascii lambda composition the DuckDB oracle
+    // mirrors. It is only defined from 8 code points up (a shorter string's
+    // sequence descends), so shorter strings expect the empty array.
+    val pows = Seq(27512614111L, 887503681L, 28629151L, 923521L, 29791L, 961L, 31L, 1L)
+    val terms = pows.zipWithIndex
+      .map { case (p, j) => s"ascii(substr(text, p + $j, 1)) * cast($p as bigint)" }
+      .mkString(" + ")
+    val lambda =
+      s"""CASE WHEN length(text) < 8 THEN cast(array() as array<bigint>)
+          ELSE transform(sequence(1, length(text) - 7), p -> ($terms) % 1000000007) END"""
+    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("text"))
+    val edgeTexts = Seq[String]("abcdefg", "abcdefgh", "abcdefghi", "          ",
+      " \t\n \t\n  ", null, "café au lait", "ab😀cdefghij",
+      "é😀é😀é😀é😀é")
+    val edges = edgeTexts.toDF("text")
+    // Scala-side reference over code points, independent of both engines
+    def reference(t: String): Seq[Long] = {
+      val cps = t.codePoints().toArray.map(_.toLong)
+      cps.indices.dropRight(7).map(p =>
+        (0 until 8).map(j => cps(p + j) * pows(j)).sum % 1000000007L)
+    }
+    var grams = 0L
+    Seq(corpus, edges).foreach { df =>
+      val rows = df.select(col("text"),
+        expr("char_gram_hashes(text)").as("native"), expr(lambda).as("hof")).collect()
+      rows.foreach { r =>
+        val native = Option(r.getSeq[Long](1))
+        assert(native == Option(r.getSeq[Long](2)),
+          s"gram arrays must match element by element for ${r.getString(0)}")
+        assert(native == Option(r.getString(0)).map(reference))
+        grams += native.fold(0)(_.length)
+      }
+    }
+    assert(grams > 100000L, s"corpus compared too few grams: $grams")
+    val byText = edges.select(col("text"), expr("char_gram_hashes(text)")).collect()
+      .map(r => Option(r.getString(0)) -> Option(r.getSeq[Long](1))).toMap
+    assert(byText(Some("abcdefg")) == Some(Seq.empty))
+    assert(byText(Some("abcdefgh")).get.length == 1)
+    assert(byText(Some("abcdefghi")).get.length == 2)
+    assert(byText(None).isEmpty)
+    // U+1F600 counts as ONE code point (value 128512): 11 code points, 4 grams
+    assert(byText(Some("ab😀cdefghij")).get.length == 4)
+    assert(byText(Some("ab😀cdefghij")).get.head ==
+      (97L * pows(0) + 98L * pows(1) + 128512L * pows(2) + 99L * pows(3) +
+        100L * pows(4) + 101L * pows(5) + 102L * pows(6) + 103L) % 1000000007L)
+  }
+
   test("slugify UDF and GeometricMean aggregator") {
     val s = spark
     import s.implicits._

@@ -114,4 +114,40 @@ class CacheInvalidationSpec extends AnyFunSuite {
     assert(sch2.fieldNames.toSet == Set("a", "b", "c"),
       "in-place part rewrite must invalidate the schema memo")
   }
+
+  test("schema memo invalidates on a part rewrite inside a partition subdirectory") {
+    // A partitioned layout keeps its part files under key=val/ directories:
+    // the memo key walks them, so an in-place rewrite there (every
+    // directory mtime pinned back) still serves the NEW schema.
+    val s = spark
+    import s.implicits._
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    val dir = Paths.get(
+      s"${System.getProperty("java.io.tmpdir")}/graft_schema_memo_partitioned")
+    if (Files.exists(dir))
+      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    val partDir = dir.resolve("key=1")
+    Files.createDirectories(partDir)
+    val part = partDir.resolve("part-00000.parquet")
+    def writePart(df: DataFrame): Unit = {
+      val staging = dir.toString + "_staging"
+      df.coalesce(1).write.mode("overwrite").parquet(staging)
+      val staged = Files.list(Paths.get(staging)).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
+      Files.move(staged, part, StandardCopyOption.REPLACE_EXISTING)
+    }
+    writePart(Seq((1L, 2L)).toDF("a", "b"))
+    val mtimes: Seq[(Path, java.nio.file.attribute.FileTime)] =
+      Seq(dir, partDir).map(d => d -> Files.getLastModifiedTime(d))
+    val sch1 = graft.queries.Tables.readPath(spark, dir.toString).schema
+    assert(sch1.fieldNames.toSet == Set("a", "b", "key"))
+
+    Thread.sleep(1100)
+    writePart(Seq((1L, 2L, "x")).toDF("a", "b", "c"))
+    mtimes.foreach { case (d, t) => Files.setLastModifiedTime(d, t) }
+    val sch2 = graft.queries.Tables.readPath(spark, dir.toString).schema
+    assert(sch2.fieldNames.toSet == Set("a", "b", "c", "key"),
+      "a part rewrite under key=val/ must invalidate the schema memo")
+  }
 }

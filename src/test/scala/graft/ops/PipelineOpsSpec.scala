@@ -266,13 +266,22 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("fingerprint is deterministic and shift-sensitive") {
-    val a = TextOps.fingerprint(docsDf(1L -> "abcdefghij")).collect()(0)
-    val b = TextOps.fingerprint(docsDf(1L -> "abcdefghij")).collect()(0)
-    assert(a.getLong(1) == b.getLong(1) && a.getLong(2) == b.getLong(2))
-    val c = TextOps.fingerprint(docsDf(1L -> "abcdefghik")).collect()(0)
-    assert(a.getLong(1) != c.getLong(1) || a.getLong(2) == c.getLong(2))
-    // 10 chars -> 3 grams of 8
-    assert(a.getLong(2) == 3L)
+    def fp(texts: (Long, String)*): Map[Long, (Long, Long)] =
+      TextOps.fingerprint(docsDf(texts: _*)).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // "abcdefghij" has gram hashes [628658458, 58359503, 488060555]
+    val out = fp(1L -> "abcdefghij", 2L -> "abcdefghik", 3L -> "abcdefgzij",
+      4L -> "abcdefghij abcdefghij", 5L -> "abcdefg")
+    assert(out(1L) == (58359503L, 3L))
+    assert(fp(1L -> "abcdefghij") == Map(1L -> (58359503L, 3L)))
+    // editing the last char only moves the last gram, not the minimum
+    assert(out(2L) == (58359503L, 3L))
+    // 'h' sits in all three windows: editing it moves the minimum
+    assert(out(3L) == (58360061L, 3L))
+    // 14 grams, the first three repeat at the end
+    assert(out(4L) == (58359503L, 11L))
+    // under 8 chars there is no gram, so no row
+    assert(!out.contains(5L))
   }
 
   test("chunking produces overlapping windows with a short tail") {

@@ -284,6 +284,17 @@ class PlanShapeSpec extends AnyFunSuite {
       s"single-partition stage in mined-pairs plan:\n$plan")
   }
 
+  test("doc_fingerprint hashes grams natively: no lambda, only the output sort's exchange") {
+    val df = Catalog.queriesMap("doc_fingerprint")(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("Final Plan"), s"expected the executed adaptive plan:\n$plan")
+    assert(plan.contains("char_gram_hashes"), s"expected the native kernel in:\n$plan")
+    assert(!plan.contains("lambdafunction"), s"interpreted lambda in:\n$plan")
+    val exchanges = "Exchange (\\w+)".r.findAllMatchIn(plan).map(_.group(1)).toSet
+    assert(exchanges == Set("rangepartitioning"), s"unexpected exchange in:\n$plan")
+  }
+
   test("dedup_decontaminate prunes the train index by the eval prefix vocab via broadcast") {
     val plan = planOf("dedup_decontaminate")
     assert(plan.toLowerCase.contains("semi"),
