@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Report a failure on stderr; stdout carries only the contract line. */
   private def warn(what: String, e: Throwable): Unit =
@@ -7,26 +6,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER / executor envs: same multi-JVM hooks as Verify —
-    // the round-15 cluster-mode bench runs the registry under
-    // `local-cluster[2,2,4096]` to measure the cost of real executor
-    // processes (serialization of the custom expressions, broadcast over
-    // an RPC boundary, executor-side state stores), not just correctness.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = Seq(
-      "SPARK_GRAFT_EXECUTOR_CLASSPATH" -> "spark.executor.extraClassPath",
-      "SPARK_GRAFT_EXECUTOR_MEM" -> "spark.executor.memory"
-    ).foldLeft(builder0) { case (b, (env, conf)) =>
-      sys.env.get(env).fold(b)(b.config(conf, _))
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    val master = spark.sparkContext.master
     // Warm up the JVM before timing: JIT + codegen + parquet footer reads
     // otherwise land entirely on whichever query happens to run first
     // (observed ~4s of session warm-up attributed to it). Standard

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for a representative set of
   * catalog queries into PLANS.md — the evidence trail that the shapes we
   * claim (pushdown, broadcasts, no cartesians, top-k operators, partition
@@ -79,14 +77,7 @@ object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans for flagship queries\n\n")
     sb.append(s"Generated by `graft.ExplainAll` against `$sfDir`. Each section: the\n")

@@ -90,24 +90,11 @@ object FaultProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val outPath = args.lift(1).getOrElse("regime_boundary.json")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,2,4096]")
+    val ckptRoot = graft.ops.SparkOps.scratch("graft_fault_ckpt").toString
+    val spark = GraftSession("local-cluster[2,2,4096]")
+    val master = spark.sparkContext.master
     require(master.startsWith("local-cluster"),
       s"FaultProbe needs real executor processes to kill; got master=$master")
-    val ckptRoot = s"${System.getProperty("java.io.tmpdir")}/graft_fault_ckpt"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptRoot))
-    val builder0 = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = Seq(
-      "SPARK_GRAFT_EXECUTOR_CLASSPATH" -> "spark.executor.extraClassPath",
-      "SPARK_GRAFT_EXECUTOR_MEM" -> "spark.executor.memory"
-    ).foldLeft(builder0) { case (b, (env, conf)) =>
-      sys.env.get(env).fold(b)(b.config(conf, _))
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     awaitExecutors(spark, 2)
     val results = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def jstr(s: String): String =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -77,16 +77,7 @@ object RegimeBoundary {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outPath = args.lift(1).getOrElse("regime_boundary.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val results = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // MERGE semantics (round 15): preload the existing artifact so a
     // filtered run (SPARK_GRAFT_REGIME_ONLY=...) overwrites only the
@@ -118,7 +109,7 @@ object RegimeBoundary {
     def wantExplicit(key: String): Boolean = only.exists(_.contains(key))
 
     // ---------------------------------------------- 10x document corpus
-    val docs10xPath = s"${System.getProperty("java.io.tmpdir")}/graft_regime_docs10x"
+    val docs10xPath = graft.ops.SparkOps.scratch("graft_regime_docs10x").toString
     if (!cacheFresh(docs10xPath, s"$sfDir/documents.parquet")) {
       val base = spark.read.parquet(s"$sfDir/documents.parquet")
         .select("doc_id", "text")
@@ -273,7 +264,7 @@ object RegimeBoundary {
     // rollup is per-lang, so the hash pins plan-equivalence across runs).
     if (want("curation")) {
       val fullPath =
-        s"${System.getProperty("java.io.tmpdir")}/graft_regime_docs10x_full"
+        graft.ops.SparkOps.scratch("graft_regime_docs10x_full").toString
       if (!Files.exists(Paths.get(fullPath, "documents.parquet", "_SUCCESS"))) {
         val base = spark.read.parquet(s"$sfDir/documents.parquet")
         val replicas = (0 until 10).map { r =>
@@ -580,7 +571,7 @@ object RegimeBoundary {
     // holds when the replayed volume scales, not just at sf0.1. Probe
     // records the wave wall and a content checksum of one member.
     if (want("wave")) try {
-      val ev10xDir = s"${System.getProperty("java.io.tmpdir")}/graft_regime_events10x"
+      val ev10xDir = graft.ops.SparkOps.scratch("graft_regime_events10x").toString
       // the wave's stream-static members read dim tables from the same
       // dir — link the sf tables in beside the 10x events
       Files.createDirectories(Paths.get(ev10xDir))
@@ -651,7 +642,7 @@ object RegimeBoundary {
     // each of which runs in its OWN JVM — the stamp-checked cache is the
     // cross-JVM handoff, so either probe can run first.
     def stage100xEvents(): String = {
-      val ev100xDir = s"${System.getProperty("java.io.tmpdir")}/graft_regime_events100x"
+      val ev100xDir = graft.ops.SparkOps.scratch("graft_regime_events100x").toString
       Files.createDirectories(Paths.get(ev100xDir))
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings").foreach { t =>
@@ -786,7 +777,7 @@ object RegimeBoundary {
     // choices are re-checked by running PlanShapeSpec against this dir
     // (GRAFT_PLANSPEC_DIR env override).
     if (want("tpch")) try {
-      val tpchDir = s"${System.getProperty("java.io.tmpdir")}/graft_regime_tpch10x"
+      val tpchDir = graft.ops.SparkOps.scratch("graft_regime_tpch10x").toString
       Files.createDirectories(Paths.get(tpchDir))
       Seq("region", "nation", "events", "documents", "embeddings").foreach { t =>
         val link = Paths.get(tpchDir, s"$t.parquet")

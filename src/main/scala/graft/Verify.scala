@@ -1,33 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the default local[n] — the round-14
-    // multi-JVM probe runs the whole registry under
-    // `local-cluster[2,2,4096]` (real executor processes, real
-    // serialization boundaries) to flush single-JVM assumptions. In that
-    // mode executors are separate JVMs, so the library classes must ship
-    // via SPARK_GRAFT_EXECUTOR_CLASSPATH (the sbt target/classes dirs).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val builder = Seq(
-      "SPARK_GRAFT_EXECUTOR_CLASSPATH" -> "spark.executor.extraClassPath",
-      "SPARK_GRAFT_EXECUTOR_MEM" -> "spark.executor.memory"
-    ).foldLeft(builder0) { case (b, (env, conf)) =>
-      sys.env.get(env).fold(b)(b.config(conf, _))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated allowlist for local iteration (the driver
     // sets no filter and runs everything).

@@ -109,19 +109,12 @@ object Quickstart {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_quickstart_out"
+    val spark = graft.GraftSession()
+    val out = O.scratch("graft_quickstart_out").toString
     val trace = curate(spark, dir, out)
     trace.result.show(10, truncate = false)
     println(s"[quickstart] counters: ${trace.counterTotals}")
-    println(s"[quickstart] sharded corpus at: $out")
+    println(s"[quickstart] sharded corpus at: $out (scratch, removed at exit)")
     spark.stop()
   }
 }

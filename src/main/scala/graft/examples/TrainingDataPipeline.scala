@@ -3,7 +3,7 @@ package graft.examples
 import graft.core._
 import graft.ops.SparkOps.Materialize
 import graft.ops.{DedupOps, SparkEnv, SparkOps => O, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end showcase: a realistic LLM training-data curation pipeline
@@ -20,16 +20,9 @@ object TrainingDataPipeline {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_curated_corpus"
+    val out = O.scratch("graft_curated_corpus").toString
 
     // ----- composable stages ------------------------------------------
     val scan = O.scanParquet("documents")
@@ -105,7 +98,7 @@ object TrainingDataPipeline {
     trace.result.show(10, truncate = false)
     println(s"[pipeline] counters: ${trace.counterTotals}")
     println(s"[pipeline] elapsed: ${trace.timeElapsedMillis} ms")
-    println(s"[pipeline] curated corpus at: $out")
+    println(s"[pipeline] curated corpus at: $out (scratch, removed at exit)")
     println("[pipeline] lineage (mermaid):")
     println(pipeline.toMermaid)
 

@@ -307,6 +307,28 @@ object SparkOps {
     */
   private val stageLock = new Object
 
+  /** `<root>/name`, where root is a fresh `graft-*` directory under the
+    * current `java.io.tmpdir`: every staged input, sink and checkpoint
+    * path lives here, so two JVMs never share one (a foreign `_STAGED`
+    * marker would pass [[stageOnce]]'s freshness check). The property is
+    * read at each call, so a caller that switches it (one tmpdir per
+    * benchmark pass) gets a new root; roots are deleted at JVM exit,
+    * after Spark's own shutdown hook has stopped the session.
+    */
+  def scratch(name: String): java.nio.file.Path =
+    scratchRoots.computeIfAbsent(System.getProperty("java.io.tmpdir"),
+      tmp => java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tmp), "graft-")
+    ).resolve(name)
+
+  private lazy val scratchRoots = {
+    val roots = new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]
+    // priority 20: below Spark's 40, above the Hadoop FileSystem cache's 10
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => roots.values.forEach(r => org.apache.commons.io.FileUtils.deleteQuietly(r.toFile)),
+      20)
+    roots
+  }
+
   // ---------------------------------------------------------- transforms
 
   def where(cond: Column): Transform[DataFrame, DataFrame] = Node(_.filter(cond))

@@ -465,7 +465,7 @@ object AnalyticsQueries {
         // back filters on the partition column, so only the o_orderstatus=F
         // directory is listed — the other partitions are never opened
         // (PartitionFilters in the scan node, zero data skipped rows).
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_part_orders"
+        val tmp = graft.ops.SparkOps.scratch("graft_part_orders").toString
         t(s, dir, "orders")
           .write.mode("overwrite").partitionBy("o_orderstatus").parquet(tmp)
         s.read.parquet(tmp)
@@ -529,12 +529,10 @@ object AnalyticsQueries {
       // copy of orders stages once per dataset dir (mtime-checked), the
       // same staging contract as the streaming replay dirs.
       (s, dir) => {
-        import java.nio.file.Paths
-        val hash = Integer.toHexString(dir.hashCode)
-        val tmp = Paths.get(
-          s"${System.getProperty("java.io.tmpdir")}/graft_dpp_orders_$hash")
+        val tmp = graft.ops.SparkOps.scratch(
+          s"graft_dpp_orders_${Integer.toHexString(dir.hashCode)}")
         val staged = graft.ops.SparkOps.stageOnce(
-          Paths.get(s"$dir/orders.parquet"), tmp) {
+          java.nio.file.Paths.get(s"$dir/orders.parquet"), tmp) {
           t(s, dir, "orders")
             .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
             .write.mode("overwrite").partitionBy("o_month").parquet(tmp.toString)
@@ -641,7 +639,7 @@ object AnalyticsQueries {
       (s, dir) => {
         // Round-trip through the ORC source (the second columnar format
         // production lakes carry besides parquet).
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_orc_nation"
+        val tmp = graft.ops.SparkOps.scratch("graft_orc_nation").toString
         val src = t(s, dir, "nation")
         src.coalesce(1).write.mode("overwrite").orc(tmp)
         s.read.schema(src.schema).orc(tmp).orderBy("n_nationkey")
@@ -951,7 +949,7 @@ object AnalyticsQueries {
       // headers, custom exports); at scale the text scan splits by line
       // ranges exactly like CSV.
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_text_region"
+        val tmp = graft.ops.SparkOps.scratch("graft_text_region").toString
         t(s, dir, "region")
           .select(concat_ws("|", col("r_regionkey"), col("r_name")).as("value"))
           .coalesce(1).write.mode("overwrite").text(tmp)
@@ -968,7 +966,7 @@ object AnalyticsQueries {
       // Round-trip through Spark 4's built-in XML source (rowTag records,
       // explicit schema — inference over XML costs a full extra pass).
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_xml_nation"
+        val tmp = graft.ops.SparkOps.scratch("graft_xml_nation").toString
         val src = t(s, dir, "nation")
         src.coalesce(1).write.format("xml").option("rowTag", "nation")
           .mode("overwrite").save(tmp)

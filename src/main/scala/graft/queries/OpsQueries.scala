@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object OpsQueries {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   def queries: Seq[QueryDef] = Seq(
     QueryDef(
       "multi_source_extract",
@@ -57,8 +54,8 @@ object OpsQueries {
       // union — the oracle over the source table proves the two sinks
       // partition the input losslessly.
       (s, dir) => {
-        val hi = tmp("graft_fanout_hi")
-        val lo = tmp("graft_fanout_lo")
+        val hi = SparkOps.scratch("graft_fanout_hi").toString
+        val lo = SparkOps.scratch("graft_fanout_lo").toString
         val env = SparkEnv(s, dir)
         val extract = SparkOps.scanParquet("lineitem").provide(env)
         val hiBranch = SparkOps.where(col("l_quantity") > 25) ~> SparkOps.writeParquet(hi)
@@ -118,7 +115,7 @@ object OpsQueries {
       (s, dir) => {
         val laid = SparkOps.zorderWrite(
           Tables.read(s, dir, "orders"),
-          "o_custkey", "o_totalprice", tmp("graft_zorder_orders"), nFiles = 16)
+          "o_custkey", "o_totalprice", SparkOps.scratch("graft_zorder_orders").toString, nFiles = 16)
         laid.filter(col("o_custkey").between(100, 300) &&
             col("o_totalprice").between(20000, 60000))
           .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -147,15 +144,12 @@ object OpsQueries {
       // is lossless (per-type counts + exact money) and that exactly 4
       // files came out (`input_file_name` distinct).
       (s, dir) => {
-        import java.nio.file.Paths
-        val frag = graft.ops.SparkOps.stageOnce(
-          Paths.get(s"$dir/events.parquet"),
-          Paths.get(tmp(s"graft_frag_events_${Integer.toHexString(dir.hashCode)}"))) {
+        val fragDir = SparkOps.scratch(s"graft_frag_events_${Integer.toHexString(dir.hashCode)}")
+        val frag = SparkOps.stageOnce(java.nio.file.Paths.get(s"$dir/events.parquet"), fragDir) {
           Tables.events(s, dir).repartition(64)
-            .write.mode("overwrite")
-            .parquet(tmp(s"graft_frag_events_${Integer.toHexString(dir.hashCode)}"))
+            .write.mode("overwrite").parquet(fragDir.toString)
         }
-        val compacted = tmp("graft_compacted_events")
+        val compacted = SparkOps.scratch("graft_compacted_events").toString
         s.read.parquet(frag)
           .repartitionByRange(4, col("ts"))
           .write.mode("overwrite").parquet(compacted)
@@ -182,7 +176,7 @@ object OpsQueries {
       // paid zero extra jobs for them. Exact arithmetic only (long counts,
       // quantized money) so observation-vs-oracle is hash-stable.
       (s, dir) => {
-        val out = tmp("graft_observed_write")
+        val out = SparkOps.scratch("graft_observed_write").toString
         val pipeline =
           Node[Unit, org.apache.spark.sql.DataFrame] { _ =>
             Tables.read(s, dir, "lineitem")

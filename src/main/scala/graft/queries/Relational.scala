@@ -49,7 +49,7 @@ object Relational {
       "scan_csv",
       (s, dir) => {
         // Round-trip through the CSV source: parquet -> csv -> read back.
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csv_nation"
+        val tmp = O.scratch("graft_csv_nation").toString
         val src = t(s, dir, "nation")
         src.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
         s.read.schema(src.schema).option("header", "true").csv(tmp)
@@ -66,7 +66,7 @@ object Relational {
         // 3 billion is not a pipeline. A crafted file mixes well-formed
         // rows with type-garbage and arity-garbage; output = clean-row
         // aggregate + quarantine count.
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csv_malformed"
+        val tmp = O.scratch("graft_csv_malformed").toString
         val f = new java.io.File(tmp)
         f.mkdirs()
         java.nio.file.Files.writeString(
@@ -105,7 +105,7 @@ object Relational {
       // read whole-file, so at scale the writer sizes files to partition
       // targets or uses a splittable codec).
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csv_gz_nation_${Integer.toHexString(dir.hashCode)}"
+        val tmp = O.scratch(s"graft_csv_gz_nation_${Integer.toHexString(dir.hashCode)}").toString
         val src = t(s, dir, "nation")
         src.coalesce(1).write.mode("overwrite")
           .option("header", "true").option("compression", "gzip").csv(tmp)
@@ -117,7 +117,7 @@ object Relational {
     QueryDef(
       "scan_json",
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_json_region_${Integer.toHexString(dir.hashCode)}"
+        val tmp = O.scratch(s"graft_json_region_${Integer.toHexString(dir.hashCode)}").toString
         val src = t(s, dir, "region")
         src.coalesce(1).write.mode("overwrite").json(tmp)
         s.read.schema(src.schema).json(tmp).orderBy("r_regionkey")
@@ -772,8 +772,7 @@ object Relational {
       (s, dir) => {
         import java.nio.file.{Files, Paths}
         val hash = Integer.toHexString(dir.hashCode)
-        val target = Paths.get(
-          System.getProperty("java.io.tmpdir"), s"graft_binfiles_$hash")
+        val target = O.scratch(s"graft_binfiles_$hash")
         O.stageOnce(Paths.get(s"$dir/documents.parquet"), target) {
           Files.createDirectories(target)
           t(s, dir, "documents").filter(col("doc_id") < 20)

@@ -653,7 +653,7 @@ object StatQueries {
       // generation surface as NULLs; the aggregate proves both the merged
       // schema and the null semantics.
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_merge_schema_${Integer.toHexString(dir.hashCode)}"
+        val tmp = SparkOps.scratch(s"graft_merge_schema_${Integer.toHexString(dir.hashCode)}").toString
         val o = t(s, dir, "orders")
         o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"))
@@ -684,7 +684,7 @@ object StatQueries {
       // join on the key. Snapshot tables are key-grain (not fact-grain), so
       // the join shuffles the small rollups only.
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_snapshots_${Integer.toHexString(dir.hashCode)}"
+        val tmp = SparkOps.scratch(s"graft_snapshots_${Integer.toHexString(dir.hashCode)}").toString
         val o = t(s, dir, "orders").select(
           col("o_custkey"), col("o_orderdate"),
           cents(col("o_totalprice")).as("cts"))

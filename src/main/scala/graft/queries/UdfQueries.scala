@@ -55,7 +55,7 @@ object UdfQueries {
       "write_parquet",
       // Sink round-trip: filter -> write (overwrite) -> re-read -> aggregate.
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_sink_lineitem"
+        val tmp = graft.ops.SparkOps.scratch("graft_sink_lineitem").toString
         Tables.read(s, dir, "lineitem")
           .filter(col("l_quantity") > 40)
           .write.mode("overwrite").parquet(tmp)

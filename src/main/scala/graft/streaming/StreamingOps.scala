@@ -87,8 +87,7 @@ object StreamingOps {
   private def stageDir(spark: SparkSession, dir: String): String = {
     import java.nio.file.Paths
     val hash = Integer.toHexString(dir.hashCode)
-    val target = Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_events_v2_$hash")
+    val target = graft.ops.SparkOps.scratch(s"graft_stream_events_v2_$hash")
     graft.ops.SparkOps.stageOnce(Paths.get(s"$dir/events.parquet"), target) {
       eventsBatch(spark, dir).write.mode("overwrite").parquet(target.toString)
     }
@@ -832,7 +831,8 @@ object StreamingOps {
     * content, not resume, is what's graded here).
     */
   def stateStoreRead(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt = s"${System.getProperty("java.io.tmpdir")}/graft_state_reader_${Integer.toHexString(dir.hashCode)}"
+    val ckpt = graft.ops.SparkOps.scratch(
+      s"graft_state_reader_${Integer.toHexString(dir.hashCode)}").toString
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     val counts = replayEvents(spark, dir)
       .groupBy(col("event_type"))
@@ -1009,8 +1009,7 @@ object StreamingOps {
     import java.nio.file.attribute.FileTime
     import scala.jdk.CollectionConverters._
     val hash = Integer.toHexString(dir.hashCode)
-    val watch = Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_outer_v2_$hash")
+    val watch = graft.ops.SparkOps.scratch(s"graft_stream_outer_v2_$hash")
     graft.ops.SparkOps.stageOnce(Paths.get(s"$dir/events.parquet"), watch) {
       if (Files.exists(watch)) {
         Files.walk(watch).iterator().asScala.toSeq.reverse.foreach(Files.delete)
@@ -1019,8 +1018,7 @@ object StreamingOps {
       val ev = eventsBatch(spark, dir)
       val maxUs = ev.agg(max(unix_micros(col("ts")))).head.getLong(0)
       def writeWave(df: DataFrame, name: String, mtime: Long): Unit = {
-        val scratch = Paths.get(
-          System.getProperty("java.io.tmpdir"), s"graft_stream_outer_v2_${hash}_$name")
+        val scratch = graft.ops.SparkOps.scratch(s"graft_stream_outer_v2_${hash}_$name")
         df.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
         val part = Files.list(scratch).iterator().asScala
           .find(_.getFileName.toString.endsWith(".parquet"))
@@ -1117,8 +1115,7 @@ object StreamingOps {
     import java.nio.file.attribute.FileTime
     import scala.jdk.CollectionConverters._
     val hash = Integer.toHexString(dir.hashCode)
-    val watch = Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_late_v2_$hash")
+    val watch = graft.ops.SparkOps.scratch(s"graft_stream_late_v2_$hash")
     graft.ops.SparkOps.stageOnce(Paths.get(s"$dir/events.parquet"), watch) {
       if (Files.exists(watch)) {
         Files.walk(watch).iterator().asScala.toSeq.reverse.foreach(Files.delete)
@@ -1126,8 +1123,7 @@ object StreamingOps {
       Files.createDirectories(watch)
       val ev = eventsBatch(spark, dir)
       def writeWave(df: DataFrame, name: String, mtime: Long): Unit = {
-        val scratch = Paths.get(
-          System.getProperty("java.io.tmpdir"), s"graft_stream_late_v2_${hash}_$name")
+        val scratch = graft.ops.SparkOps.scratch(s"graft_stream_late_v2_${hash}_$name")
         df.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
         val part = Files.list(scratch).iterator().asScala
           .find(_.getFileName.toString.endsWith(".parquet"))
@@ -1188,8 +1184,7 @@ object StreamingOps {
   private def stageSlices(spark: SparkSession, dir: String, n: Int): String = {
     import java.nio.file.Paths
     val hash = Integer.toHexString(dir.hashCode)
-    val target = Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_slices_v2_${hash}_$n")
+    val target = graft.ops.SparkOps.scratch(s"graft_stream_slices_v2_${hash}_$n")
     graft.ops.SparkOps.stageOnce(Paths.get(s"$dir/events.parquet"), target) {
       eventsBatch(spark, dir)
         .repartitionByRange(n, col("ts"))
@@ -1287,8 +1282,7 @@ object StreamingOps {
     import java.nio.file.attribute.FileTime
     import scala.jdk.CollectionConverters._
     val hash = Integer.toHexString(dir.hashCode)
-    val watch = Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_sess_v2_$hash")
+    val watch = graft.ops.SparkOps.scratch(s"graft_stream_sess_v2_$hash")
     graft.ops.SparkOps.stageOnce(Paths.get(s"$dir/events.parquet"), watch) {
       if (Files.exists(watch)) {
         Files.walk(watch).iterator().asScala.toSeq.reverse.foreach(Files.delete)
@@ -1297,8 +1291,7 @@ object StreamingOps {
       val ev = eventsBatch(spark, dir)
         .withColumn("ts_us", unix_micros(col("ts")))
       def writeWave(df: DataFrame, name: String, mtime: Long): Unit = {
-        val scratch = Paths.get(
-          System.getProperty("java.io.tmpdir"), s"graft_stream_sess_v2_${hash}_$name")
+        val scratch = graft.ops.SparkOps.scratch(s"graft_stream_sess_v2_${hash}_$name")
         df.drop("ts_us").coalesce(1).write.mode("overwrite").parquet(scratch.toString)
         val part = Files.list(scratch).iterator().asScala
           .find(_.getFileName.toString.endsWith(".parquet"))
@@ -1345,11 +1338,9 @@ object StreamingOps {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
     val slices = stageSlices(spark, dir, 3)
-    // Unique across JVMs, not just within one: the per-session runId
-    // restarts at 1 in every JVM, and a leftover sink from a previous
-    // process would silently union into this run's append sink.
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_ckpt_restart_${java.util.UUID.randomUUID().toString.take(12)}")
+    // Unique per run: a leftover sink would silently union into this
+    // run's append sink.
+    val base = graft.ops.SparkOps.scratch(s"graft_ckpt_restart_${runId.incrementAndGet()}")
     val watch = base.resolve("watch")
     val ckpt = base.resolve("ckpt")
     val sink = base.resolve("sink")
@@ -1451,9 +1442,7 @@ object StreamingOps {
     * Returns (final state, number of micro-batches processed).
     */
   def foreachBatchUpsert(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val stateRoot = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_upsert_state_${runId.incrementAndGet()}")
+    val stateRoot = graft.ops.SparkOps.scratch(s"graft_upsert_state_${runId.incrementAndGet()}")
     val slices = stageSlices(spark, dir, n = 3)
     val stream = spark.readStream
       .schema(eventsStagedSchema)

@@ -125,6 +125,48 @@ class SparkOpsSpec extends AnyFunSuite {
     assert(writes == 2, "restaged marker is current again")
   }
 
+  test("scratch: a foreign staged dir at the old shared tmpdir path is never read") {
+    import java.nio.file.{Files, Paths}
+    // What another JVM staged before scratch roots existed: a fresh
+    // `_STAGED` marker over one row that is not this dataset's orders.
+    val foreign = Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_dpp_orders_${Integer.toHexString(dir.hashCode)}")
+    val orders = spark.read.parquet(s"$dir/orders.parquet")
+    try {
+      orders.limit(1).withColumn("o_month", lit("1996-01"))
+        .write.mode("overwrite").partitionBy("o_month").parquet(foreign.toString)
+      Files.createFile(foreign.resolve("_STAGED"))
+      val got = graft.queries.Catalog.queriesMap("join_dpp_pruned")(spark, dir).collect()
+      val want = orders
+        .filter(year(col("o_orderdate")) === 1996 && quarter(col("o_orderdate")) === 1)
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n"),
+          graft.queries.Tables.moneySum(col("o_totalprice")).as("total"))
+        .orderBy("o_orderpriority").collect()
+      assert(got.toSeq == want.toSeq)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(foreign.toFile)
+  }
+
+  test("scratch: one root per java.io.tmpdir value, created under it") {
+    import java.nio.file.{Files, Paths}
+    val saved = System.getProperty("java.io.tmpdir")
+    val other = Files.createTempDirectory("graft_scratch_spec")
+    try {
+      val a = SparkOps.scratch("x")
+      assert(a.getParent.getParent == Paths.get(saved))
+      assert(SparkOps.scratch("y").getParent == a.getParent, "same tmpdir, same root")
+      System.setProperty("java.io.tmpdir", other.toString)
+      val b = SparkOps.scratch("x")
+      assert(b.getParent.getParent == other, "new tmpdir, root under it")
+      assert(b.getParent.getFileName.toString.startsWith("graft-"))
+      System.setProperty("java.io.tmpdir", saved)
+      assert(SparkOps.scratch("x") == a, "switching back reuses the first root")
+    } finally {
+      System.setProperty("java.io.tmpdir", saved)
+      org.apache.commons.io.FileUtils.deleteQuietly(other.toFile)
+    }
+  }
+
   test("fan-out load: one source, two sinks via & then >>") {
     val env = SparkEnv(spark, dir)
     val tmpA = s"${System.getProperty("java.io.tmpdir")}/graft_fan_a"

@@ -49,9 +49,8 @@ class OpsQueriesSpec extends AnyFunSuite {
   test("fanout_load sinks partition the source losslessly") {
     val run = Catalog.queriesMap("fanout_load")
     run(spark, dir) // stages both sinks
-    val tmp = System.getProperty("java.io.tmpdir")
-    val hi = spark.read.parquet(s"$tmp/graft_fanout_hi").count()
-    val lo = spark.read.parquet(s"$tmp/graft_fanout_lo").count()
+    val hi = spark.read.parquet(SparkOps.scratch("graft_fanout_hi").toString).count()
+    val lo = spark.read.parquet(SparkOps.scratch("graft_fanout_lo").toString).count()
     val src = spark.read.parquet(s"$dir/lineitem.parquet").count()
     assert(hi + lo == src, s"hi=$hi lo=$lo src=$src")
     assert(hi > 0 && lo > 0)

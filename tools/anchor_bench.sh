@@ -11,8 +11,7 @@ SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 for i in 1 2 3; do
   LOAD=$(cut -d' ' -f1 /proc/loadavg)
   echo "=== bench run $i (1-min load at start: $LOAD) ==="
-  SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS=32 \
-    sbt -batch "runMain graft.Bench" > "/tmp/bench_r6_run$i.log" 2>&1 || true
+  SPARK_GRAFT_SF_DIR="$SF_DIR" sbt -batch "runMain graft.Bench" > "/tmp/bench_r6_run$i.log" 2>&1 || true
   cp bench_last.json "/tmp/bench_r6_run$i.json"
   echo "$LOAD" > "/tmp/bench_r6_run$i.load"
   python3 -c "import json; d=json.load(open('/tmp/bench_r6_run$i.json')); print('run $i total:', round(d['value'],1), 'errors:', d['errors'])"

@@ -12,10 +12,10 @@ cd "$(dirname "$0")/.."
 N=${1:-3}
 for i in $(seq 1 "$N"); do
   rm -rf "/tmp/protocol_verify_$i"
-  SPARK_GRAFT_CPUS=32 sbt -batch \
+  sbt -batch \
     "runMain graft.Verify /root/testdata/sf0.01 /tmp/protocol_verify_$i" \
     > "/tmp/protocol_verify_$i.log" 2>&1
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 sbt -batch \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch \
     "runMain graft.Bench" > "/tmp/protocol_bench_$i.log" 2>&1
   cp bench_last.json "/tmp/protocol_run_$i.json"
   python3 -c "import json; d=json.load(open('/tmp/protocol_run_$i.json')); \

@@ -7,8 +7,9 @@
 # warning with the regeneration command, not an auto-run.
 #
 # Usage: tools/round_close.sh          # recall + freshness gates only
-#        tools/round_close.sh --full   # + sbt test, sf0.01 verify vs the
-#                                      #   DuckDB oracle, one sf0.1 bench —
+#        tools/round_close.sh --full   # + sbt test, sf0.001 and sf0.01
+#                                      #   verify in two concurrent JVMs vs
+#                                      #   the DuckDB oracle, one sf0.1 bench —
 #                                      #   non-zero exit on ANY gate, so a
 #                                      #   round cannot close on stale or
 #                                      #   unchecked evidence by accident
@@ -27,7 +28,7 @@ FULL=0
 run_sbt() {  # run_sbt <logfile> <sbt args...>
   local log="$1"; shift
   local rc=0
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" sbt -batch "$@" > "$log" 2>&1 || rc=$?
+  sbt -batch "$@" > "$log" 2>&1 || rc=$?
   grep -E "\[recall\]|all_pass|Tests:|error\]|FAILED" "$log" || true
   if [[ $rc -ne 0 ]]; then
     echo "GATE FAIL: sbt $* exited $rc (log: $log)"; exit "$rc"
@@ -44,13 +45,22 @@ run_sbt /tmp/round_close_recall.log \
   "runMain graft.RecallReport /root/testdata/sf0.01 recall_report.json"
 
 if [[ $FULL -eq 1 ]]; then
-  echo "=== [full] sf0.01 verify + DuckDB oracle ==="
-  rm -rf /tmp/round_close_verify
-  run_sbt /tmp/round_close_verify.log \
-    "runMain graft.Verify /root/testdata/sf0.01 /tmp/round_close_verify"
-  python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/round_close_verify
+  # Two Verify JVMs at once: each stages under its own SparkOps.scratch
+  # root, so concurrent runs must not see each other's inputs.
+  echo "=== [full] concurrent sf0.001 + sf0.01 verify + DuckDB oracle ==="
+  pids=()
+  for sf in 0.001 0.01; do
+    rm -rf "/tmp/round_close_verify_$sf"
+    run_sbt "/tmp/round_close_verify_$sf.log" \
+      "runMain graft.Verify /root/testdata/sf$sf /tmp/round_close_verify_$sf" &
+    pids+=($!)
+  done
+  for pid in "${pids[@]}"; do wait "$pid"; done
+  for sf in 0.001 0.01; do
+    python3 tools/check_oracle.py "/root/testdata/sf$sf" "/tmp/round_close_verify_$sf"
+  done
   echo "=== [full] one sf0.1 bench (read vs BASELINE medians; storms self-adjudicate in bench_last.json) ==="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
     run_sbt /tmp/round_close_bench.log "runMain graft.Bench"
   python3 - <<'EOF'
 import json
